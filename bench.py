@@ -22,11 +22,16 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # The headline set IS the registry: every registered query gets a
 # bench number (a hand-maintained list silently dropped value_cdf in
 # round 3 — VERDICT r3 item #4), EXCEPT the explicitly-labeled
-# quadratic all-pairs baselines below — measured 184 s at sf0.1
+# quadratic all-pairs baselines — measured 184 s at sf0.1
 # (cosine_near_dups), which is the baseline doing exactly what its
 # docstring says it does at N=2000. They are excluded LOUDLY (the
-# JSON carries an "excluded" field), not silently.
-EXCLUDED_QUADRATIC_BASELINES = ["cosine_near_dups"]
+# JSON carries an "excluded" field), not silently; each declares
+# bench_excluded=True in its register() line.
+def excluded_queries() -> list[str]:
+    from joblink_etl_spark.plans import registry
+
+    return [n for n, s in registry.specs().items() if s.bench_excluded]
+
 
 # Container-health canary (r9 verdict item 2, basket since r14): solo
 # probes BEFORE and AFTER the main loop make a drifting container
@@ -164,7 +169,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = registry.queries()
-    names = [n for n in qs if n not in EXCLUDED_QUADRATIC_BASELINES]
+    excluded = excluded_queries()
+    names = [n for n in qs if n not in excluded]
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
     prior, prior_source = load_prior(detail_path)
     # warm the JVM + parquet footers so timings measure steady state
@@ -325,7 +331,7 @@ def format_output(
         # (statistics.median: true even-n median, not the
         # upper-middle element — ADVICE r05)
         "median_sec": round(statistics.median(timings.values()), 3),
-        "excluded": EXCLUDED_QUADRATIC_BASELINES,
+        "excluded": excluded_queries(),
         "sf": sf,
         "detail_file": os.path.basename(detail_path),
     }

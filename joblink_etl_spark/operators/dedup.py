@@ -564,8 +564,10 @@ def connected_components(
     the checkpoint is LAZY, and the convergence count IS the
     materializing action — one count_if aggregate per job replaces
     the old eager-checkpoint job + separate filter/limit/count job.
-    For graphs with giant components, swap the propagation step for
-    alternating large-star/small-star rounds — the fixpoint and
+    ``max_iter`` caps the propagation rounds after the initial
+    neighbor-min labeling exactly (an odd cap ends on a one-round
+    batch). For graphs with giant components, swap the propagation
+    step for alternating large-star/small-star rounds — the fixpoint and
     output contract are identical.
     """
     sym = (
@@ -604,16 +606,17 @@ def connected_components(
             ).alias("_chg"),
         )
 
-    for _ in range(max(1, (max_iter + 1) // 2)):
+    for left in range(max_iter, 0, -2):
         # the odd round is lazily pinned because the even round
         # references it TWICE (neighbor build keyed on b, label join
         # keyed on node — different exchanges, so Catalyst would
         # execute the subtree once per reference); the pin makes both
         # consumers share one computation inside the same job
         mid = _round(labels).localCheckpoint(eager=False)
-        new_labels = _round(mid).localCheckpoint(eager=False)
+        # with one round of max_iter left, the batch runs just that one
+        new_labels = _round(mid).localCheckpoint(eager=False) if left > 1 else mid
         # the count_if action materializes the lazy checkpoint AND
-        # reads the second round's convergence flag in the same job
+        # reads the batch's last round's convergence flag in the same job
         changed = new_labels.agg(
             F.count_if(F.col("_chg")).alias("_n")
         ).first()["_n"]

@@ -245,8 +245,8 @@ def span_unit_repeats(
     # checkpoint cuts that lineage once at ≤top_n rows; both
     # broadcasts then rebuild from the checkpointed partitions.
     # Construction runs the chain's jobs (AQE materializes lazy
-    # checkpoints at .rdd) — span_unit_repeats is on the
-    # CONSTRUCTION_JOB_EXEMPT list like every other barrier pin. The
+    # checkpoints at .rdd) — span_unit_repeats declares
+    # construction="barrier" like every other barrier pin. The
     # dedup still sees only the narrow (id, span_md5) keys (r14).
     cands_b = F.broadcast(cands.localCheckpoint(eager=False))
     matched = (

@@ -1,6 +1,12 @@
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
+
+# the plan walker and audit helpers the tests share with the tools
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"

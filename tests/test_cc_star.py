@@ -3,6 +3,8 @@ identical components on the shapes that stress each algorithm."""
 
 from __future__ import annotations
 
+import pytest
+
 from joblink_etl_spark.operators import dedup as D
 
 
@@ -52,6 +54,20 @@ class TestStarContraction:
         assert rows[5]["cluster_id"] == 2 and not rows[5]["is_canonical"]
         assert rows[9]["cluster_id"] == 2 and not rows[9]["is_canonical"]
         assert rows[30]["is_canonical"] and not rows[31]["is_canonical"]
+
+
+@pytest.mark.parametrize("max_iter", [0, 1, 2, 3])
+def test_cc_max_iter_is_exact(spark, max_iter):
+    """max_iter caps the min-label rounds exactly, odd caps included:
+    on the 9-node path the labels equal the initial neighbor-min
+    labeling followed by exactly max_iter rounds of min-propagation."""
+    n = 9
+    nbrs = {i: {j for j in (i - 1, i + 1) if 0 <= j < n} for i in range(n)}
+    want = {i: min({i} | nbrs[i]) for i in range(n)}
+    for _ in range(max_iter):
+        want = {i: min([want[i]] + [want[j] for j in nbrs[i]]) for i in range(n)}
+    e = _edges(spark, [(i, i + 1) for i in range(n - 1)])
+    assert _labels(D.connected_components(e, max_iter=max_iter)) == want
 
 
 class TestIterationJobShape:

@@ -1,5 +1,5 @@
 """Enforced localCheckpoint pin census (r11 verdict item: the
-CONSTRUCTION_JOB_EXEMPT analogue for lineage pins).
+construction-job declaration analogue for lineage pins).
 
 A localCheckpoint materializes its input to executor-LOCAL block
 storage and severs lineage: an executor loss after the pin fails the
@@ -225,7 +225,7 @@ def _function_node(rel: str, name: str) -> ast.FunctionDef:
 
 
 def test_every_pin_site_is_classified_both_directions():
-    """Two-direction equality, the CONSTRUCTION_JOB_EXEMPT pattern:
+    """Two-direction equality, the construction-job declaration pattern:
     a new localCheckpoint anywhere in the package fails until it is
     classified in PIN_CENSUS (with its scale class reviewed), and a
     retired pin leaves a stale census entry that also fails. Site
@@ -462,33 +462,19 @@ def test_staleness_audit_is_green_and_bounded():
     assert out["max_staleness_rounds"] is not None
 
 
-def test_broadcast_audit_fixed_queries_stay_clean(spark):
+def test_broadcast_audit_fixed_queries_stay_clean(spark, sf_dir):
     """Fast regression slice of tools/broadcast_audit.py: the three
     queries whose misestimated corpus-scale broadcasts the r12 x100
     audit caught (incremental substring dedup's gram index,
     nb_classify's exploded feature re-join, interval_join's exploded
-    interval side) must plan with ZERO generate-class broadcasts, and
-    the two whitelisted contract-bounded cases must stay the only
-    generate-class carriers in this set. Runs against sf0.001 —
-    the detection is structural (explode inside a broadcast subtree
-    with no bounding node), so it holds at any SF for these plans."""
-    import os
-    import sys
+    interval side) must plan with ZERO generate-class broadcasts. Runs
+    against sf0.001 — the detection is structural (explode inside a
+    broadcast subtree with no bounding node), so it holds at any SF
+    for these plans."""
+    from plan_audit import generate_class_broadcasts, plan_nodes
 
-    import joblink_etl_spark
     from joblink_etl_spark.plans import registry
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.abspath(joblink_etl_spark.__file__))
-    )
-    sys.path.insert(0, os.path.join(repo, "tools"))
-    from broadcast_audit import WHITELIST, generate_class_broadcasts
-
-    # formatted: the mode the tool itself scans since r14 (it also
-    # prints subquery plan trees — see tests/test_tools.py)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     qs = registry.queries()
     fixed = (
         "incremental_repeat_spans",
@@ -498,10 +484,9 @@ def test_broadcast_audit_fixed_queries_stay_clean(spark):
         "record_linkage",
     )
     for name in fixed:
-        plan = qs[name](spark, "/root/testdata/sf0.001")._jdf.queryExecution().explainString(mode)
-        assert generate_class_broadcasts(plan) == 0, (
+        nodes = list(plan_nodes(qs[name](spark, sf_dir)))
+        assert generate_class_broadcasts(nodes) == 0, (
             f"{name}: a generate-class broadcast came back — re-check "
             "the merge hint / carry-through-explode fix"
         )
-    for name in WHITELIST:
-        assert name in qs, f"whitelist entry {name} no longer registered"
+        spark.catalog.clearCache()

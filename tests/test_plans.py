@@ -1,7 +1,9 @@
 """Physical-plan regression tests: the scale properties we claim
 (broadcast dims, filter pushdown, column pruning, bucketed
-shuffle-free joins, skew salting) asserted against `.explain`
-output, so a refactor that silently degrades the plan fails CI."""
+shuffle-free joins, skew salting) asserted against the physical plan
+— node classes from the tools/plan_audit.py walker, attribute checks
+(pushed filters, pruned columns, partitioning) against `.explain`
+output — so a refactor that silently degrades the plan fails CI."""
 
 from __future__ import annotations
 
@@ -11,6 +13,7 @@ from contextlib import redirect_stdout
 from pyspark.sql import functions as F
 
 from joblink_etl_spark.plans import relational as R
+from plan_audit import node_classes, plan_nodes
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -23,11 +26,11 @@ def plan_of(df, mode: str = "formatted") -> str:
 
 
 def test_star_join_broadcasts_all_dims(spark):
-    plan = plan_of(R.revenue_by_nation(spark, SF_SMALL))
+    nodes = node_classes(R.revenue_by_nation(spark, SF_SMALL))
     # customer, nation, region all broadcast; only the fact join and
     # the final agg may shuffle
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "AdaptiveSparkPlan" in plan
+    assert nodes["BroadcastHashJoinExec"] >= 3, nodes
+    assert nodes["AdaptiveSparkPlanExec"]
 
 
 def test_pricing_summary_pushes_filter_and_prunes_columns(spark):
@@ -65,9 +68,10 @@ def test_bucketed_join_needs_no_exchange(spark, tmp_path):
             spark.table("t_orders_b"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # bucketing co-locates both sides
+        nodes = node_classes(joined)
+        assert nodes["SortMergeJoinExec"]
+        # bucketing co-locates both sides
+        assert not [c for c in nodes if c.endswith("ExchangeExec")], nodes
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS t_orders_b")
@@ -106,7 +110,7 @@ def test_optimize_layout_range_partitions_and_sorts(spark):
     out = optimize_layout(df, ["k"], n_partitions=4)
     plan = plan_of(out, mode="extended")
     assert "RepartitionByExpression" in plan or "rangepartitioning" in plan.lower()
-    assert "Sort" in plan
+    assert node_classes(out)["SortExec"]
     # content is unchanged
     assert out.count() == 100
     # within every partition, k is nondecreasing
@@ -184,7 +188,7 @@ def test_zorder_layout_clusters_both_dims(spark):
     out = zorder_layout(df, ["x", "y"], bits=6, n_partitions=16)
     plan = plan_of(out, mode="extended")
     assert "RepartitionByExpression" in plan or "rangepartitioning" in plan.lower()
-    assert "Sort" in plan
+    assert node_classes(out)["SortExec"]
 
     rows = out.select(
         F.spark_partition_id().alias("pid"), "x", "y", "z_key"
@@ -217,65 +221,8 @@ def test_curation_pipeline_scans_corpus_once(spark):
 
     df = E.curation_pipeline(spark, "/root/testdata/sf0.001")
     df.write.format("noop").mode("overwrite").save()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") == 2, plan.count("Scan parquet")
-
-
-# The EXACT set of registered queries allowed to run bounded Spark
-# jobs at plan CONSTRUCTION (r10 verdict item 4 — the exemption list
-# is enumerated so a future localCheckpoint pin / eager count cannot
-# silently join it, and a removed pin leaves a stale entry that fails
-# the equality check below). Every entry is one of four documented
-# shapes, all bounded (iteration counts / aggregate sizes fixed by
-# construction, never O(corpus) result pulls to the driver):
-CONSTRUCTION_JOB_EXEMPT = frozenset(
-    # (a) iterative fixed-point algorithms — each iteration pins its
-    # frontier (localCheckpoint, eager under AQE) and/or checks
-    # convergence with a bounded count(); a single lazy plan cannot
-    # express data-dependent iteration. hierarchy_rollup additionally
-    # runs ancestor_rollup's default-on convergence guard (anti-join
-    # count at call time — correctness-over-laziness, graph.py).
-    [
-        "pagerank_docs", "pagerank_weighted", "ppr_docs",
-        "label_propagation", "dedup_clusters", "dedup_clusters_star",
-        "leakage_split", "canonical_source_pick", "soft_dedup_weights",
-        "ingestion_islands", "hierarchy_rollup",
-    ]
-    # (b) trained-model builds — Lloyd/BPE/doubling iterations whose
-    # per-round state (centroids / merge table / probe lengths) is
-    # pinned between rounds: the r9 _pq_train tradeoff (plan analysis
-    # no longer re-walks the HOF assign tree per iteration).
-    + [
-        "knn_pq", "knn_ivfpq", "knn_ivfpq_res", "pq_codes",
-        "ann_index_add", "ann_method_recall", "semdedup_ivf",
-        "semdedup_prune", "cluster_sample",
-        "bpe_merges", "bpe_merges_fixed", "bpe_encode",
-        "lrs_exact", "lrs_exact_fixed",
-    ]
-    # (c) shared-subtree barrier pins with measured wins (PERF.md):
-    # bm25's tf relation (4 consumers, r10), winnowing fingerprints,
-    # scrub cut-lists, and the composite pipelines built on them.
-    + [
-        "bm25_rank", "retrieval_metrics", "hybrid_retrieval",
-        "winnowing_pairs", "scrub_spans", "scrubbed_corpus",
-        "web_curation_pipeline", "quality_gate", "ngram_coverage",
-        "cosine_near_dups", "snm_pairs",
-        # r15: span_unit_repeats' bounded candidate relation feeds two
-        # differently-keyed broadcasts (gram probe + re-attach) that
-        # cannot ReusedExchange; the lazy pin runs the candidate chain
-        # once instead of once per broadcast.
-        "span_unit_repeats",
-    ]
-    # (d) two-phase builds — a small aggregate (quantile grid, vocab,
-    # mixture weights, batch spec, row count) is computed up front
-    # because the second phase's SHAPE depends on its values.
-    + [
-        "zipf_fit", "ppl_bucket_mixture", "curriculum_order",
-        "length_bias", "vocab_growth", "quantile_norm",
-        "epoch_shuffle", "length_bucket_batches",
-        "fetch_cascade", "writeback_incremental",
-    ]
-)
+    scans = node_classes(df)["FileSourceScanExec"]
+    assert scans == 2, scans
 
 
 def test_builders_run_no_action_at_construction(spark):
@@ -283,20 +230,23 @@ def test_builders_run_no_action_at_construction(spark):
     localCheckpoint (eager under AQE even with eager=False): at scale
     a construction-time action is an unrequested full corpus pass per
     query build. Builds EVERY registered plan in its own job group and
-    asserts the set that ran construction-time jobs equals the
-    enumerated CONSTRUCTION_JOB_EXEMPT list exactly — both directions:
-    a new pin must be reviewed onto the list, and a retired pin must
-    be removed from it."""
+    asserts the set that ran construction-time jobs equals the set of
+    queries declaring ``construction=`` in their register() line
+    exactly (one of registry.CONSTRUCTION_SHAPES, all bounded) — both
+    directions: a new pin must be reviewed and declared, and a retired
+    pin's declaration must be removed."""
     from joblink_etl_spark.plans import registry
 
     sc = spark.sparkContext
     sf = "/root/testdata/sf0.001"
     triggered = set()
-    for name, fn in registry.queries().items():
+    specs = registry.specs()
+    exempt = {n for n, spec in specs.items() if spec.construction}
+    for name, spec in specs.items():
         group = f"plan-build-lazy-check-{name}"
         sc.setJobGroup(group, f"assert no Spark job building {name}")
         try:
-            fn(spark, sf)
+            spec.fn(spark, sf)
         finally:
             for prop in (
                 "spark.jobGroup.id",
@@ -307,8 +257,8 @@ def test_builders_run_no_action_at_construction(spark):
         if list(sc.statusTracker().getJobIdsForGroup(group)):
             triggered.add(name)
         spark.catalog.clearCache()
-    unexpected = triggered - CONSTRUCTION_JOB_EXEMPT
-    stale = CONSTRUCTION_JOB_EXEMPT - triggered
+    unexpected = triggered - exempt
+    stale = exempt - triggered
     assert not unexpected, (
         "new construction-time jobs (review + document): "
         f"{sorted(unexpected)}. NOTE: this check is environment-"
@@ -320,10 +270,10 @@ def test_builders_run_no_action_at_construction(spark):
     )
     assert not stale, (
         f"stale exemptions: {sorted(stale)}. Either the pin was "
-        "retired (remove the entry) OR this host/Spark conf simply "
-        "didn't fire the job that the reference container does "
-        "(environment-sensitive — see docstring); verify which before "
-        "editing the list."
+        "retired (remove the construction= declaration) OR this host/"
+        "Spark conf simply didn't fire the job that the reference "
+        "container does (environment-sensitive — see docstring); verify "
+        "which before editing the declaration."
     )
 
 
@@ -367,8 +317,8 @@ def test_assign_paths_have_no_ranking_windows(spark):
         ("pq_codes", E.pq_codes_q),
         ("cosine_near_dups_lsh", E.cosine_near_dups_lsh),
     ):
-        plan = plan_of(builder(spark, SF_SMALL))
-        assert "Window" not in plan, f"{name} regressed to a windowed assign"
+        nodes = node_classes(builder(spark, SF_SMALL))
+        assert not nodes["WindowExec"], f"{name} regressed to a windowed assign"
 
 
 def test_suffix_verify_joins_are_broadcast_not_cartesian(spark):
@@ -378,10 +328,10 @@ def test_suffix_verify_joins_are_broadcast_not_cartesian(spark):
     CartesianProduct / BroadcastNestedLoopJoin into the plan."""
     from joblink_etl_spark.plans import ext_q as E
 
-    plan = plan_of(E.span_unit_repeats_q(spark, SF_SMALL))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan
+    nodes = node_classes(E.span_unit_repeats_q(spark, SF_SMALL))
+    assert not nodes["CartesianProductExec"]
+    assert not nodes["BroadcastNestedLoopJoinExec"]
+    assert nodes["BroadcastHashJoinExec"]
 
 
 def test_winnowing_join_runs_on_fingerprints_not_grams(spark):
@@ -389,9 +339,9 @@ def test_winnowing_join_runs_on_fingerprints_not_grams(spark):
     gram hash; no cartesian/nested-loop anywhere in the plan."""
     from joblink_etl_spark.plans import ext_q as E
 
-    plan = plan_of(E.winnowing_pairs_q(spark, SF_SMALL))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    nodes = node_classes(E.winnowing_pairs_q(spark, SF_SMALL))
+    assert not nodes["CartesianProductExec"]
+    assert not nodes["BroadcastNestedLoopJoinExec"]
 
 
 def test_lm_score_is_two_aggregates_no_window(spark):
@@ -400,9 +350,9 @@ def test_lm_score_is_two_aggregates_no_window(spark):
     every doc's bigrams)."""
     from joblink_etl_spark.plans import ext_q as E
 
-    plan = plan_of(E.ngram_lm_score_q(spark, SF_SMALL))
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan
+    nodes = node_classes(E.ngram_lm_score_q(spark, SF_SMALL))
+    assert not nodes["WindowExec"]
+    assert not nodes["CartesianProductExec"]
 
 
 def test_bpe_pair_counts_single_shuffle_chain(spark):
@@ -411,9 +361,9 @@ def test_bpe_pair_counts_single_shuffle_chain(spark):
     around each Exchange, never a sort-based fallback."""
     from joblink_etl_spark.plans import ext_q as E
 
-    plan = plan_of(E.bpe_pair_counts_q(spark, SF_SMALL))
-    assert "CartesianProduct" not in plan
-    assert plan.count("HashAggregate") >= 4  # partial+final × 2 aggs
+    nodes = node_classes(E.bpe_pair_counts_q(spark, SF_SMALL))
+    assert not nodes["CartesianProductExec"]
+    assert nodes["HashAggregateExec"] >= 4, nodes  # partial+final × 2 aggs
 
 
 def test_interval_join_is_hash_join_not_nested_loop(spark):
@@ -422,10 +372,10 @@ def test_interval_join_is_hash_join_not_nested_loop(spark):
     as BroadcastNestedLoopJoin (O(n·m) compares)."""
     from joblink_etl_spark.plans import ext_q as E
 
-    plan = plan_of(E.interval_join_q(spark, SF_SMALL))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "Join" in plan
+    nodes = node_classes(E.interval_join_q(spark, SF_SMALL))
+    assert not nodes["BroadcastNestedLoopJoinExec"]
+    assert not nodes["CartesianProductExec"]
+    assert [c for c in nodes if c.endswith("JoinExec")], nodes
 
 
 def test_bloom_semi_join_stays_hash_join(spark):
@@ -434,10 +384,13 @@ def test_bloom_semi_join_stays_hash_join(spark):
     bitmap rides as a one-row broadcast."""
     from joblink_etl_spark.plans import maint_q as MQ
 
-    plan = plan_of(MQ.bloom_semi_join_q(spark, SF_SMALL))
-    semi = [ln for ln in plan.splitlines() if "Join" in ln and "LeftSemi" in ln]
-    assert semi, plan
-    assert all("NestedLoop" not in ln for ln in semi), semi
+    semi = [
+        cls
+        for _, cls, n in plan_nodes(MQ.bloom_semi_join_q(spark, SF_SMALL))
+        if cls.endswith("JoinExec") and n.joinType().toString() == "LeftSemi"
+    ]
+    assert semi
+    assert "BroadcastNestedLoopJoinExec" not in semi, semi
 
 
 def test_priority_sample_uses_take_ordered(spark):
@@ -446,8 +399,8 @@ def test_priority_sample_uses_take_ordered(spark):
     the corpus."""
     from joblink_etl_spark.plans import select_q as SQ
 
-    plan = plan_of(SQ.priority_sample_q(spark, SF_SMALL))
-    assert "TakeOrderedAndProject" in plan, plan
+    nodes = node_classes(SQ.priority_sample_q(spark, SF_SMALL))
+    assert nodes["TakeOrderedAndProjectExec"], nodes
 
 
 def test_jl_project_is_scan_side(spark):
@@ -455,15 +408,14 @@ def test_jl_project_is_scan_side(spark):
     one-row sign matrix."""
     from joblink_etl_spark.plans import select_q as SQ
 
-    plan = plan_of(SQ.jl_project_q(spark, SF_SMALL))
     # the only allowed exchanges are broadcast-side (sign row / gmax
     # one-row aggregates); no hash-partitioned shuffle of the corpus
-    import re
-
     hash_ex = [
-        ln
-        for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln or "Exchange rangepartitioning" in ln
+        part
+        for _, cls, n in plan_nodes(SQ.jl_project_q(spark, SF_SMALL))
+        if cls == "ShuffleExchangeExec"
+        and (part := n.outputPartitioning().getClass().getSimpleName())
+        in ("HashPartitioning", "RangePartitioning")
     ]
     assert not hash_ex, hash_ex
 
@@ -480,36 +432,31 @@ def test_dataloader_queries_use_range_sort_and_broadcast(spark):
         plan = fn(spark, sf)._jdf.queryExecution().toString()
         assert "rangepartitioning" in plan.lower()
         spark.catalog.clearCache()
-    plan = SQ.length_bucket_batches_q(spark, sf)._jdf.queryExecution().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    nodes = node_classes(SQ.length_bucket_batches_q(spark, sf))
+    assert nodes["BroadcastHashJoinExec"] or nodes["BroadcastExchangeExec"], nodes
     spark.catalog.clearCache()
 
 
 def test_exempt_disposition_table_covers_exempt_set():
-    """r12 verdict item 1: the broadcast audit's exemption list must
-    carry a per-query disposition — an x100 runtime probe citation
-    (derived from tools/scale_probe.py FAMILIES), a banked
-    --exempt-audit build, or a documented size bound — so no exempt
-    query is ever 'unexamined'. Both directions: a new exempt query
-    with no disposition fails, and a disposition for a query that is
-    no longer exempt fails."""
-    import os
-    import sys
+    """r12 verdict item 1: every query declaring construction= must
+    carry a broadcast-audit disposition — an x100 runtime probe
+    citation (a declared scale_probe family), a banked --exempt-audit
+    build, or a declared size bound — so no exempt query is ever
+    'unexamined'. A bound declared on a query that runs no
+    construction jobs is refused at registration."""
+    import pytest
 
-    import joblink_etl_spark
+    from broadcast_audit import exempt_dispositions
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.abspath(joblink_etl_spark.__file__))
-    )
-    sys.path.insert(0, os.path.join(repo, "tools"))
-    from broadcast_audit import EXEMPT_BOUNDS, exempt_dispositions
+    from joblink_etl_spark.plans import registry
 
-    disp = exempt_dispositions(CONSTRUCTION_JOB_EXEMPT)
-    assert set(disp) == set(CONSTRUCTION_JOB_EXEMPT)
+    specs = registry.specs()
+    disp = exempt_dispositions(specs)
+    assert set(disp) == {n for n, s in specs.items() if s.construction}
     kinds = {d.split(":", 1)[0] for d in disp.values()}
     assert kinds <= {"probe", "x100-audit", "bound"}, kinds
-    stale_bounds = set(EXEMPT_BOUNDS) - set(CONSTRUCTION_JOB_EXEMPT)
-    assert not stale_bounds, f"bound disposition for non-exempt: {stale_bounds}"
+    with pytest.raises(ValueError, match="state_bound without construction"):
+        registry.register("unbuilt", None, None, state_bound="reason")
     # the judge-named iterative builders must each have an explicit
     # executable check (probe row or x100-audit build), not just a bound
     for name in (
@@ -534,34 +481,23 @@ def test_minhash_front_end_never_broadcasts_corpus(spark):
     pinned the same way."""
     from joblink_etl_spark.plans import registry
 
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "simple"
-    )
     qs = registry.queries()
-    plan = (
-        qs["minhash_pairs"](spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .explainString(mode)
-    )
-    assert plan.count("BroadcastExchange") == 0, plan
-    assert plan.count("SortMergeJoin") >= 3
+    nodes = node_classes(qs["minhash_pairs"](spark, SF_SMALL))
+    assert nodes["BroadcastExchangeExec"] == 0, nodes
+    assert nodes["SortMergeJoinExec"] >= 3, nodes
     # r14: the signature aggregate must stay a HashAggregate — the
     # (id, shingles, sig) carry-through spelling put an array-typed
     # first() buffer in it, silently demoting it to a SortAggregate
     # that sorted the full shingle array per exploded row
     # (O(|shingles|²) bytes/doc). The split front end (sh/sigs/banded)
     # keeps arrays out of every aggregate buffer on this path.
-    assert "SortAggregate" not in plan, plan
+    assert not nodes["SortAggregateExec"], nodes
     spark.catalog.clearCache()
 
-    plan = (
-        qs["semdedup_prune"](spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .explainString(mode)
-    )
+    nodes = node_classes(qs["semdedup_prune"](spark, SF_SMALL))
     # the peers (cells) join must be shuffle-based, not broadcast
-    assert "BroadcastExchange" not in plan, plan
-    assert "SortMergeJoin" in plan
+    assert not nodes["BroadcastExchangeExec"], nodes
+    assert nodes["SortMergeJoinExec"]
     spark.catalog.clearCache()
 
     # r14: span_unit_repeats' (id, span_md5) dedup must stay a
@@ -570,10 +506,6 @@ def test_minhash_front_end_never_broadcasts_corpus(spark):
     # span bytes per matched pair and demoted the dedup to a
     # SortAggregate (string-typed first() buffer). The candidate
     # attributes re-attach from the ≤top_n broadcast instead.
-    plan = (
-        qs["span_unit_repeats"](spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution()
-        .explainString(mode)
-    )
-    assert "SortAggregate" not in plan, plan
+    nodes = node_classes(qs["span_unit_repeats"](spark, SF_SMALL))
+    assert not nodes["SortAggregateExec"], nodes
     spark.catalog.clearCache()

@@ -1,43 +1,21 @@
-"""Tests for the audit tools themselves (tools/broadcast_audit.py).
+"""Tests for the audit tools themselves (tools/plan_audit.py's plan
+walker, tools/broadcast_audit.py).
 
-r14 switched the scan from 'simple' to 'formatted' explain mode so
-subquery plan trees (`===== Subqueries =====` sections) are scanned
-under one explicit, version-independent grammar — the r12 verdict's
-documented caveat was that subquery plans might escape the
-structural scan. (Empirically, Spark 4.1.2's simple mode ALSO
-inlines subquery subtrees as innerChildren, so both modes cover
-them on this version; formatted makes the coverage explicit and
-uniform.) These tests pin: (a) a synthetic generate-class broadcast
-living inside a scalar subquery is caught in the formatted scan,
-(b) the operator-detail sections of formatted output produce no
-phantom matches, (c) the designed quadratic-guard refusal is
-classified as such, not as an audit error.
+The walker reads the physical plan as a tree of nodes instead of
+parsing explain text. These tests pin: (a) a generate-class broadcast
+living inside a scalar subquery is found (the walk descends subquery
+plans), (b) an explode on a join's stream side is not counted against
+the broadcast side, (c) a broadcast whose build side is a cached,
+already-materialised relation is judged on that relation's final
+plan, (d) the designed quadratic-guard refusal is classified as such,
+not as an audit error.
 """
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
-
-import joblink_etl_spark
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(joblink_etl_spark.__file__)))
-sys.path.insert(0, os.path.join(_REPO, "tools"))
-
-from broadcast_audit import (  # noqa: E402
-    WHITELIST,
-    _is_guard_refusal,
-    generate_class_broadcasts,
-)
-
-
-def _explain(spark, df, mode_name):
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        mode_name
-    )
-    return df._jdf.queryExecution().explainString(mode)
+from broadcast_audit import _is_guard_refusal
+from plan_audit import generate_class_broadcasts, plan_nodes
 
 
 @pytest.fixture()
@@ -63,32 +41,56 @@ def subquery_broadcast_plan(spark):
     )
 
 
-def test_formatted_mode_catches_subquery_broadcast(spark, subquery_broadcast_plan):
-    """The r14 scan mode: the subquery tree is printed inline and the
-    generate-class broadcast inside it is counted."""
-    plan = _explain(spark, subquery_broadcast_plan, "formatted")
-    assert "===== Subqueries =====" in plan
-    assert "BroadcastExchange" in plan
-    assert generate_class_broadcasts(plan) >= 1
+def test_walker_catches_subquery_broadcast(spark, subquery_broadcast_plan):
+    """The walk descends into the scalar subquery's plan and counts the
+    generate-class broadcast inside it."""
+    nodes = list(plan_nodes(subquery_broadcast_plan))
+    assert "SubqueryExec" in {cls for _, cls, _ in nodes}
+    assert generate_class_broadcasts(nodes) == 1
 
 
-def test_formatted_mode_detail_sections_no_phantom_matches(spark):
-    """The operator-detail sections of formatted output ('(6)
-    BroadcastExchange' + 'Input [...]' lines at column 0) must not
-    produce phantom generate-class counts: a broadcast whose subtree
-    has NO explode scans clean even though 'Generate' appears
-    elsewhere in the same formatted string."""
+def test_walker_keeps_stream_side_explode_apart(spark):
+    """A broadcast whose subtree has NO explode scans clean even though
+    the plan explodes elsewhere (on the join's stream side)."""
     small = spark.range(5).selectExpr("id AS k")
     big = spark.range(1000).selectExpr(
         "id", "explode(array(id, id + 1)) AS k"
     )
-    # The explode is on the STREAM side; the broadcast side (small)
-    # is explode-free — formatted detail sections print both nodes'
-    # details, but the tree-subtree walk must keep them apart.
-    joined = big.join(small.hint("broadcast"), "k")
-    plan = _explain(spark, joined, "formatted")
-    assert "BroadcastExchange" in plan and "Generate" in plan
-    assert generate_class_broadcasts(plan) == 0
+    nodes = list(plan_nodes(big.join(small.hint("broadcast"), "k")))
+    classes = {cls for _, cls, _ in nodes}
+    assert {"BroadcastExchangeExec", "GenerateExec"} <= classes
+    assert generate_class_broadcasts(nodes) == 0
+
+
+def test_walker_reads_final_plan_of_materialised_cache(spark):
+    """The build side explodes a cached relation that was materialised
+    first, itself built on a materialised cache, so both plans are
+    FINAL adaptive plans. Explain prints each twice (Final and Initial
+    Plan) with the indentation restarted; under a few enclosing joins
+    that restart cut the old text scan's subtree short before the
+    bounding aggregate (it counted 1 here). The walk follows each
+    cached plan once: bounded by the aggregate, 0; the same shape
+    without it, 1."""
+    from pyspark.sql import functions as F
+
+    ids = spark.range(100)
+    for base, want in (
+        (ids.groupBy((F.col("id") % 10).alias("g")).agg(F.collect_list("id").alias("ids")), 0),
+        (ids.selectExpr("array(id, id + 1) AS ids").repartition(3), 1),
+    ):
+        base = base.cache()
+        base.count()
+        side = base.selectExpr("explode(ids) AS k").cache()
+        side.count()
+        j = spark.range(1000).selectExpr("id AS k").join(side.hint("broadcast"), "k")
+        for i in range(3):
+            dim = spark.range(50).selectExpr("id AS k", f"id AS v{i}")
+            j = j.join(dim.hint("broadcast"), "k")
+        nodes = list(plan_nodes(j))
+        assert "InMemoryRelation" in {cls for _, cls, _ in nodes}
+        assert generate_class_broadcasts(nodes) == want
+        side.unpersist()
+        base.unpersist()
 
 
 def test_guard_refusal_classifier():
@@ -104,11 +106,3 @@ def test_guard_refusal_classifier():
     assert _is_guard_refusal(designed)
     assert not _is_guard_refusal(ValueError("some other failure"))
     assert not _is_guard_refusal(RuntimeError("allow_quadratic mentioned"))
-
-
-def test_whitelist_entries_still_registered():
-    from joblink_etl_spark.plans import registry
-
-    qs = registry.queries()
-    for name in WHITELIST:
-        assert name in qs

@@ -17,6 +17,7 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import statistics
 import subprocess
 import sys
@@ -101,27 +102,13 @@ def load_old_module(path: str, ref: str) -> types.ModuleType:
 
 
 def main() -> None:
-    args, n, ref, skip = [], 3, "HEAD", False
-    argv = sys.argv[1:]
-    for i, a in enumerate(argv):
-        if skip:
-            skip = False
-            continue
-        if a.startswith("--n"):
-            if "=" in a:
-                n = int(a.split("=")[1])
-            else:
-                n = int(argv[i + 1])
-                skip = True
-        elif a.startswith("--ref"):
-            if "=" in a:
-                ref = a.split("=")[1]
-            else:
-                ref = argv[i + 1]
-                skip = True
-        elif not a.startswith("--"):
-            args.append(a)
-    sf_dir, names = args[0], args[1:]
+    ap = argparse.ArgumentParser(description="interleaved old-vs-new A/B")
+    ap.add_argument("sf_dir")
+    ap.add_argument("names", nargs="+", metavar="query")
+    ap.add_argument("--n", type=int, default=3, help="interleaved pairs per query")
+    ap.add_argument("--ref", default="HEAD", help="git ref of the OLD arm")
+    args = ap.parse_args()
+    sf_dir, names, n, ref = args.sf_dir, args.names, args.n, args.ref
 
     import importlib
 

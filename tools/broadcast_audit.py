@@ -14,59 +14,45 @@ interval_join_binned's exploded interval side this way).
 This tool builds each registered query's physical plan against a
 LARGE corpus (the cached x100 scratch replica by default — at small
 SFs the same structural pattern is often a legitimately-small
-broadcast) and flags every BroadcastExchange whose subtree contains
-a Generate with no bounding operator (aggregate / limit /
-TakeOrdered) between the explode and the exchange. Whitelisted
-entries are bounded by PRODUCTION CONTRACT rather than by plan
-shape, with the reason recorded.
+broadcast) and walks it as a tree of physical nodes
+(tools/plan_audit.py ``plan_nodes``). The walk descends every node's
+children and inner children (scalar / IN subquery plans; a cached
+scan's InMemoryRelation), AdaptiveSparkPlanExec's current plan, each
+query stage's plan and each InMemoryRelation's cached plan; a
+ReusedExchange is a leaf, walked once where it is defined. A
+BroadcastExchange is generate-class when its subtree holds a
+Generate (explode) and NO bounding node (aggregate / limit /
+TakeOrdered, plan_audit.BOUND_NODES) anywhere in that subtree.
+Queries declaring ``broadcast_bound=`` in their register() line are
+bounded by PRODUCTION CONTRACT rather than by plan shape, with the
+reason recorded.
 
 Filter/scan-class broadcasts (no explode) are NOT flagged: their
 estimates track file sizes, so the planner flips them to sort-merge
-as data grows — that class is self-correcting.
+as data grows — that class is self-correcting. Treat this scan as
+structural triage, with the x100 runtime probes (PERF.md) as the
+executable backstop.
 
-SCAN MODE (r14, closing the r12 detection-limit caveat): the scan
-reads the 'formatted' explain string, which prints the main plan
-tree AND every subquery plan tree (the `===== Subqueries =====`
-sections) in the same indentation grammar — a generate-class
-broadcast living only inside a scalar/IN subquery is classified,
-not excused in prose (tests/test_tools.py pins a synthetic
-scalar-subquery catch). Empirical note recorded while making the
-switch: on THIS Spark (4.1.2) 'simple' mode also inlines subquery
-subtrees as innerChildren (`:  +- Subquery ...`), so the r12-era
-blind-spot description was already stale for this version; the
-formatted grammar is kept because it prints each tree exactly once
-in one uniform shape (no `:`-prefixed inner-children variant to
-special-case) and makes the subquery coverage explicit rather than
-version-dependent. ReusedExchange remains sound: the defining
-subtree of every reused exchange is printed (and scanned) exactly
-once, at its first occurrence in whichever tree owns it. The
-operator-detail sections below each tree ('(6) BroadcastExchange'
-etc.) start at column 0, so the indentation-subtree walk terminates
-before them and they contribute no phantom matches
-(tests/test_tools.py). Treat this scan as structural triage, with
-the x100 runtime probes (PERF.md) as the executable backstop.
-
-CONSTRUCTION_JOB_EXEMPT queries (iterative builders whose plan
+Queries declaring ``construction=`` (iterative builders whose plan
 CONSTRUCTION runs Spark jobs) are not planned in the standing run —
-but since r13 every one of them carries an explicit per-query
-disposition, printed in the output:
-  * probe      — the query has an x100 RUNTIME probe row in PERF.md
-                 (tools/scale_probe.py family): it was executed at
-                 x100, where a misestimated broadcast aborts loudly
-                 (exactly how incremental_repeat_spans was caught).
+but every one of them carries an explicit per-query disposition,
+printed in the output:
+  * probe      — the query declares a scale_probe ``family=``: it has
+                 an x100 RUNTIME probe row in PERF.md, where a
+                 misestimated broadcast aborts loudly (exactly how
+                 incremental_repeat_spans was caught).
   * x100-audit — `--exempt-audit` built it (capped where noted)
-                 against the x100 replica this round: construction
-                 jobs executed at x100 + final-plan scan; banked as
-                 AUDIT_EXEMPT_r13.json.
-  * bound      — a documented reason the constructed state is
-                 size-bounded independent of corpus scale.
-tests/test_plans.py enforces that the disposition table covers the
-exempt set exactly, so a new exempt query fails until dispositioned.
+                 against the x100 replica: construction jobs executed
+                 at x100 + final-plan scan; banked as AUDIT_EXEMPT_r*.json.
+  * bound      — the query declares ``state_bound=``: a documented
+                 reason the constructed state is size-bounded
+                 independent of corpus scale.
 
 Usage:
   python tools/broadcast_audit.py [--round N] [sf_dir] [query ...]
   python tools/broadcast_audit.py --exempt-audit [--round N] [sf_dir] [query ...]
-Exit 1 on any non-whitelisted generate-class broadcast (or, in
+Exit 1 on any generate-class broadcast of a query that declares no
+``broadcast_bound=`` (or, in
 --exempt-audit mode, on any exempt query that errors or flags).
 A designed quadratic-guard refusal (the cosine_near_dups max_rows
 ValueError) is status 'guard_refusal_by_design' — a verified
@@ -78,6 +64,7 @@ is reproducible from this committed tool.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -85,50 +72,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-BOUND_NODES = (
-    "HashAggregate",
-    "SortAggregate",
-    "ObjectHashAggregate",
-    "GlobalLimit",
-    "TakeOrderedAndProject",
-    "CollectLimit",
-)
-
-# (query, reason) — generate-class broadcasts bounded by production
-# contract, not plan shape. Keep each reason checkable.
-WHITELIST = {
-    # bench/benchmark side of decontamination: constant-size in
-    # production (the held-out eval suite); the testdata synthesizes
-    # it as a corpus modulus, which is what the auditor sees.
-    "semantic_decontam": "broadcast side is the benchmark embedding set "
-    "(constant in production; testdata synthesizes it as vec_id % 46)",
-    # corpus capped at doc_id < 60 BY DESIGN (dense synthetic
-    # vocabulary; the production lever is max_gram_df) — documented
-    # in the plan docstring and confirmed N-independent by the x100
-    # probe (factor 0.56x).
-    "containment_pairs": "constant-capped corpus (doc_id < 60) by design",
-}
-
-# Exempt queries whose constructed/loop state is bounded independent
-# of corpus scale — the "bound" disposition kind. Everything exempt
-# that is neither here nor covered by a scale_probe x100 family is
-# expected to appear in the banked --exempt-audit artifact.
-EXEMPT_BOUNDS = {
-    "cosine_near_dups": "the O(N²) all-pairs baseline REFUSES corpus-scale "
-    "input by contract (cosine_near_dup_pairs max_rows guard — verified "
-    "live by the r13 x100 exempt-audit run, which recorded the designed "
-    "refusal); bench excludes it as the labeled quadratic baseline",
-    "lrs_exact_fixed": "runs on the SF-INVARIANT enum vocabulary (61 "
-    "strings: nation/region names + part type/brand enums) — the corpus "
-    "never scales with SF (plans/ext_q.py docstring); also in the r13 "
-    "exempt-audit artifact",
-    "web_curation_pipeline": "synthetic crawl capped at max_docs=20 by "
-    "construction (pin census: bounded); also in the r13 exempt-audit "
-    "artifact",
-    "fetch_cascade": "operates on a fetch BATCH (batch_size=40 contract, "
-    "SURVEY §2.9 A2 head-N) — never corpus-scale; also in the r13 "
-    "exempt-audit artifact",
-}
+from plan_audit import generate_class_broadcasts, plan_nodes  # noqa: E402
 
 # Capped construction variants for --exempt-audit: same operators and
 # plan shapes, fewer iterations/probe rounds, so the x100 build cost
@@ -177,23 +121,23 @@ CAPPED_RUNNERS = {
 CAPPED_RUNNERS = {k: v for k, v in CAPPED_RUNNERS.items() if v is not None}
 
 
-def exempt_dispositions(exempt) -> dict[str, str]:
-    """name -> 'kind: detail' for every exempt query. probe-kind is
-    derived from tools/scale_probe.py's FAMILIES map (the queries with
-    x100 runtime rows in PERF.md), bound-kind from EXEMPT_BOUNDS, and
-    the remainder cites the banked --exempt-audit artifact."""
-    from scale_probe import FAMILIES
-
-    probed = {q: f for f, q in FAMILIES.items()}
+def exempt_dispositions(specs) -> dict[str, str]:
+    """name -> 'kind: detail' for every query declaring construction=:
+    probe-kind for a declared scale_probe family (the queries with
+    x100 runtime rows in PERF.md), bound-kind for a declared
+    state_bound, and the remainder cites the banked --exempt-audit
+    artifact."""
     out = {}
-    for name in sorted(exempt):
-        if name in probed:
+    for name, spec in sorted(specs.items()):
+        if not spec.construction:
+            continue
+        if spec.family:
             out[name] = (
                 f"probe: x100 runtime probe row (PERF.md, scale_probe "
-                f"family '{probed[name]}')"
+                f"family '{spec.family}')"
             )
-        elif name in EXEMPT_BOUNDS:
-            out[name] = f"bound: {EXEMPT_BOUNDS[name]}"
+        elif spec.state_bound:
+            out[name] = f"bound: {spec.state_bound}"
         else:
             capped = " (capped construction)" if name in CAPPED_RUNNERS else ""
             out[name] = (
@@ -212,25 +156,6 @@ def _latest_exempt_artifact() -> str:
         key=lambda f: int("".join(c for c in os.path.basename(f) if c.isdigit())),
     )
     return os.path.basename(banked[-1]) if banked else "AUDIT_EXEMPT (unbanked)"
-
-
-def generate_class_broadcasts(plan: str) -> int:
-    lines = plan.split("\n")
-    bad = 0
-    for i, ln in enumerate(lines):
-        if "BroadcastExchange" not in ln:
-            continue
-        indent = len(ln) - len(ln.lstrip(" :+-"))
-        sub = []
-        for nxt in lines[i + 1:]:
-            nind = len(nxt) - len(nxt.lstrip(" :+-"))
-            if nind <= indent and nxt.strip():
-                break
-            sub.append(nxt)
-        subtxt = "\n".join(sub)
-        if "Generate" in subtxt and not any(b in subtxt for b in BOUND_NODES):
-            bad += 1
-    return bad
 
 
 def _default_round() -> int:
@@ -253,67 +178,50 @@ def _is_guard_refusal(exc: Exception) -> bool:
     return isinstance(exc, ValueError) and "allow_quadratic" in str(exc)
 
 
-def _exempt_set():
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"
-        ),
-    )
-    try:
-        from test_plans import CONSTRUCTION_JOB_EXEMPT as EXEMPT
-    except ImportError:
-        EXEMPT = frozenset()
-    return EXEMPT
-
-
 def main() -> None:
     default_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ".scratch",
         "sf1x100p",
     )
-    args = sys.argv[1:]
-    exempt_mode = "--exempt-audit" in args
-    args = [a for a in args if a != "--exempt-audit"]
-    round_no = None
-    if "--round" in args:
-        i = args.index("--round")
-        round_no = int(args[i + 1])
-        del args[i : i + 2]
-    if round_no is None:
-        round_no = _default_round()
-    sf_dir = args[0] if args else default_dir
-    only = set(args[1:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default=default_dir)
+    ap.add_argument("queries", nargs="*", help="audit only these (default: all)")
+    ap.add_argument("--exempt-audit", action="store_true")
+    ap.add_argument("--round", type=int, help="artifact round (default: latest + 1)")
+    args = ap.parse_args()
+    exempt_mode = args.exempt_audit
+    round_no = _default_round() if args.round is None else args.round
+    sf_dir = args.sf_dir
+    only = set(args.queries)
 
     from joblink_etl_spark.plans import registry
     from joblink_etl_spark.session import get_spark
 
-    EXEMPT = _exempt_set()
-    dispositions = exempt_dispositions(EXEMPT)
+    specs = registry.specs()
+    exempt = sorted(n for n, s in specs.items() if s.construction)
+    dispositions = exempt_dispositions(specs)
+
+    def scan(df) -> int:
+        return generate_class_broadcasts(list(plan_nodes(df)))
 
     spark = get_spark("broadcast-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    # 'formatted' prints subquery plan trees too — see SCAN MODE above.
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
 
     if exempt_mode:
         # build every exempt query (capped where registered) against the
         # replica: construction jobs EXECUTE at x100 (an abort here is a
         # real catch), then the final plan gets the structural scan.
         results = {}
-        for name in sorted(EXEMPT):
+        for name in exempt:
             if only and name not in only:
                 continue
-            fn = CAPPED_RUNNERS.get(name) or registry.queries()[name]
+            fn = CAPPED_RUNNERS.get(name) or specs[name].fn
             t0 = time.perf_counter()
             try:
-                plan = fn(spark, sf_dir)._jdf.queryExecution().explainString(mode)
                 results[name] = {
                     "status": "ok",
-                    "generate_class": generate_class_broadcasts(plan),
+                    "generate_class": scan(fn(spark, sf_dir)),
                     "capped": name in CAPPED_RUNNERS,
                     "sec": round(time.perf_counter() - t0, 2),
                 }
@@ -345,19 +253,19 @@ def main() -> None:
             n: r
             for n, r in results.items()
             if r["status"] not in ("ok", "guard_refusal_by_design")
-            or (r.get("generate_class") and n not in WHITELIST)
+            or (r.get("generate_class") and not specs[n].broadcast_bound)
         }
         print(
             json.dumps(
                 {
                     "sf_dir": sf_dir,
                     "round": round_no,
-                    "what": "every CONSTRUCTION_JOB_EXEMPT query built "
+                    "what": "every query declaring construction= built "
                     "(capped where noted) against the x100 perturbed "
                     "replica: construction jobs executed at x100 + "
                     "structural scan of the final plan "
                     "(tools/broadcast_audit.py --exempt-audit)",
-                    "scan_mode": "formatted",
+                    "scan_mode": "plan_nodes",
                     "n_ok": sum(
                         1 for r in results.values() if r["status"] == "ok"
                     ),
@@ -375,45 +283,39 @@ def main() -> None:
 
     flagged, whitelisted, errors = {}, {}, {}
     statuses = {}
-    for name, fn in registry.queries().items():
+    for name, spec in specs.items():
         if only and name not in only:
             continue
-        if not only and name in EXEMPT:
+        if not only and spec.construction:
             statuses[name] = dispositions[name]
             continue
         try:
-            plan = (
-                fn(spark, sf_dir)
-                ._jdf.queryExecution()
-                .explainString(mode)
-            )
+            n = scan(spec.fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001 — audit must not die on one query
             errors[name] = str(e)[:150]
             statuses[name] = "error"
             continue
-        n = generate_class_broadcasts(plan)
-        if n:
-            (whitelisted if name in WHITELIST else flagged)[name] = n
-            statuses[name] = (
-                f"whitelisted ({n} generate-class)" if name in WHITELIST
-                else f"FLAGGED ({n} generate-class)"
-            )
+        finally:
+            spark.catalog.clearCache()
+        if n and spec.broadcast_bound:
+            whitelisted[name] = spec.broadcast_bound
+            statuses[name] = f"whitelisted ({n} generate-class)"
+        elif n:
+            flagged[name] = n
+            statuses[name] = f"FLAGGED ({n} generate-class)"
         else:
             statuses[name] = "clean"
-        spark.catalog.clearCache()
 
     print(
         json.dumps(
             {
                 "sf_dir": sf_dir,
                 "round": round_no,
-                "scan_mode": "formatted",
+                "scan_mode": "plan_nodes",
                 "flagged": flagged,
-                "whitelisted": {k: WHITELIST[k] for k in whitelisted},
+                "whitelisted": whitelisted,
                 "errors": errors,
-                "exempt_dispositions": {
-                    n: dispositions[n] for n in sorted(EXEMPT)
-                },
+                "exempt_dispositions": {n: dispositions[n] for n in exempt},
                 "queries": statuses,
                 "n_queries": len(statuses),
             }

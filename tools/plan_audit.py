@@ -2,130 +2,188 @@
 and flag scale anti-patterns in the planned (not executed) physical
 plan — the compile-time complement to scale_probe's runtime probes.
 
-Checks per query:
+Each plan is built once and walked as a tree of physical nodes
+(``plan_nodes``), never parsed from explain text. Checks per query:
 - CartesianProduct: an unconditioned big-big join (always a bug at
   scale; broadcast one-row scalar attachment plans as
   BroadcastNestedLoopJoin and is NOT flagged).
-- BroadcastNestedLoopJoin with a non-trivial condition: usually an
-  inequality join that silently degenerated (informational).
-- GLOBAL window (a Window node with no partition spec — every row
-  through one task): flagged unless the query is in
-  GLOBAL_WINDOW_OK, the allowlist of windows proven bounded by
-  construction (input is an aggregate of ≤ ~100 rows).
+- BroadcastNestedLoopJoin count: usually an inequality join that
+  silently degenerated (informational, ``bnlj_info``).
+- GLOBAL window (a WindowExec with no partition spec but an ordering
+  — every row through one task): flagged unless the query declares
+  ``global_window=`` (bounded by construction: the window's input is
+  an aggregate of <= ~100 rows) in its register() line.
+- SortAggregate count (``sortagg``): usually an aggregate whose
+  buffer carries an array/struct/string payload (first()-buffered
+  non-key columns), so the whole input rides a per-partition SORT
+  instead of hash aggregation. Keyless global aggregates also plan
+  as SortAggregate and are fine. Aggregate strategy is type-driven,
+  not stats-driven, so sf0.001 shows it.
+- generate-class broadcasts (``generate_class``): the rule of
+  tools/broadcast_audit.py, which judges them against the x100 replica.
 
-Queries that are quadratic BY DESIGN and guarded (documented
-baselines) are whitelisted below.
+Queries declared ``quadratic=True`` (documented quadratic baselines,
+guarded by row caps) are not checked for Cartesian / nested-loop joins.
 
-Usage: python tools/plan_audit.py [sf_dir] [query ...]
+--dump DIR also writes each audited query's formatted explain to
+DIR/<query>.txt: diff two dump directories to check that a refactor
+left the plans byte-identical.
+
+Usage: python tools/plan_audit.py [--dump DIR] sf_dir [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import sys
+from collections import Counter
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# documented quadratic baselines / bounded-corpus verification
-# queries — kept only as recall yardsticks, excluded from bench,
-# guarded by row caps (see VERDICT r5 / operators' docstrings)
-WHITELIST = {
-    "cosine_near_dups",
-    "ngram_jaccard",
-    "tfidf_pairs",
-    "prefix_jaccard",
-    "snm_pairs",
-    "dedup_method_recall",
-}
-
-# global (unpartitioned) windows that are bounded BY CONSTRUCTION:
-# the window's input is a post-aggregate / post-limit relation whose
-# row count cannot scale with the corpus — audited r8, see
-# each query/operator docstring
-GLOBAL_WINDOW_OK: set[str] = {
-    "zipf_fit",            # lag over <= 64 log2-rank bucket rows
-    "vocab_growth",        # cumulative over 10 decile-bucket rows
-    "waterfill_alloc",     # bracket windows over |domains| rows
-    "cluster_sample",      # waterfill over <= k_cap cluster rows
-    "dedup_ttl_decay",     # cumulative over ~10 magnitude buckets
-    "merged_quantiles",    # global rank over the 512-row summary
-    "embedding_outliers",  # rank over the top-N candidate aggregate
-    "priority_sample",     # row_number AFTER .limit(k+1) (21 rows)
-    "histogram_quantiles", # cumulative over histogram bucket rows
-    "feature_bins",        # bin-boundary window over bin rows
-    "skew_report",         # rank over per-group aggregate rows
-    "ingestion_islands",   # lead over island summaries (#gaps rows)
-}
+# nodes that bound a relation's size independent of its input
+BOUND_NODES = frozenset(
+    {
+        "HashAggregateExec",
+        "SortAggregateExec",
+        "ObjectHashAggregateExec",
+        "GlobalLimitExec",
+        "TakeOrderedAndProjectExec",
+        "CollectLimitExec",
+    }
+)
 
 
-def _global_window_lines(plan: str) -> int:
-    """Count Window nodes with NO partition clause. Spark's simple
-    mode prints `Window [fns], [part], [order]` (3 groups,
-    partitioned+ordered), `Window [fns], [part]` (2 groups,
-    partitioned unordered), or `Window [fns], [order]` (2 groups,
-    GLOBAL ordered — every row through one task). The global case is
-    the 2-group form whose LAST group is a pure ordering (ASC/DESC
-    tokens); partitioned-unordered windows have a bare column list
-    there and are fine."""
-    n = 0
-    for line in plan.splitlines():
-        s = line.strip().lstrip("+-: *")
-        if not s.startswith("Window "):
+def _seq(s) -> list:
+    it = s.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def plan_nodes(df):
+    """Yield (depth, class name, JVM node) for every node of df's
+    physical plan, pre-order. Descends children() and innerChildren()
+    (subquery plans; a cached scan's InMemoryRelation),
+    AdaptiveSparkPlanExec.executedPlan(), *QueryStageExec.plan() and
+    InMemoryRelation.cachedPlan(). A ReusedExchange is a leaf: its
+    defining subtree is walked once, where it is defined."""
+    stack = [(0, df._jdf.queryExecution().executedPlan())]
+    while stack:
+        depth, node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        yield depth, cls, node
+        if cls == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif cls.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif cls == "InMemoryRelation":
+            kids = [node.cachedPlan()]
+        else:
+            kids = _seq(node.children()) + _seq(node.innerChildren())
+        stack.extend((depth + 1, k) for k in reversed(kids))
+
+
+def node_classes(df) -> Counter:
+    return Counter(cls for _, cls, _ in plan_nodes(df))
+
+
+def generate_class_broadcasts(nodes) -> int:
+    """BroadcastExchanges whose subtree holds a Generate (explode) and
+    no bounding node (BOUND_NODES) anywhere in it: the build side's
+    size is Catalyst's guess after an explode."""
+    bad = 0
+    for i, (depth, cls, _) in enumerate(nodes):
+        if cls != "BroadcastExchangeExec":
             continue
-        depth, groups, cur = 0, [], []
-        for ch in s:
-            if ch == "[":
-                if depth == 0:
-                    cur = []
-                depth += 1
-                if depth == 1:
-                    continue
-            elif ch == "]":
-                depth -= 1
-                if depth == 0:
-                    groups.append("".join(cur))
-                    continue
-            if depth >= 1:
-                cur.append(ch)
-        if len(groups) == 2 and (" ASC" in groups[-1] or " DESC" in groups[-1]):
-            n += 1
-    return n
+        sub = set()
+        for d, c, _ in nodes[i + 1:]:
+            if d <= depth:
+                break
+            sub.add(c)
+        if "GenerateExec" in sub and not sub & BOUND_NODES:
+            bad += 1
+    return bad
+
+
+def audit(df) -> dict[str, int]:
+    nodes = list(plan_nodes(df))
+    classes = Counter(cls for _, cls, _ in nodes)
+    return {
+        "cartesian": classes["CartesianProductExec"],
+        "bnlj": classes["BroadcastNestedLoopJoinExec"],
+        "global_window": sum(
+            1
+            for _, cls, n in nodes
+            if cls == "WindowExec"
+            and n.partitionSpec().isEmpty()
+            and n.orderSpec().nonEmpty()
+        ),
+        "sortagg": classes["SortAggregateExec"],
+        "generate_class": generate_class_broadcasts(nodes),
+    }
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("queries", nargs="*", help="audit only these (default: all)")
+    ap.add_argument("--dump", metavar="DIR", help="write DIR/<query>.txt explains")
+    args = ap.parse_args()
+    only = set(args.queries)
+    if args.dump:
+        os.makedirs(args.dump, exist_ok=True)
     from joblink_etl_spark.plans import registry
     from joblink_etl_spark.session import get_spark
 
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
-    flagged, info, errors = {}, {}, {}
-    qs = registry.queries()
-    for name, fn in qs.items():
+    flagged, info, sortagg, gen, errors = {}, {}, {}, {}, {}
+    for name, spec in registry.specs().items():
         if only and name not in only:
             continue
         try:
-            df = fn(spark, sf_dir)
-            mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "simple"
-            )
-            plan = df._jdf.queryExecution().explainString(mode)
+            df = spec.fn(spark, args.sf_dir)
+            if args.dump:
+                with open(os.path.join(args.dump, f"{name}.txt"), "w") as f:
+                    f.write(
+                        spark._jvm.PythonSQLUtils.explainString(
+                            df._jdf.queryExecution(), "formatted"
+                        )
+                    )
+            a = audit(df)
         except Exception as e:  # noqa: BLE001 — audit must cover the rest
             errors[name] = str(e).splitlines()[0][:200]
             continue
-        if "CartesianProduct" in plan and name not in WHITELIST:
+        finally:
+            spark.catalog.clearCache()
+        if a["cartesian"] and not spec.quadratic:
             flagged[name] = "CartesianProduct"
-        elif "BroadcastNestedLoopJoin" in plan and name not in WHITELIST:
+        elif a["bnlj"] and not spec.quadratic:
             # one-row scalar attachments are fine; record for review
-            info[name] = plan.count("BroadcastNestedLoopJoin")
-        gw = _global_window_lines(plan)
-        if gw and name not in GLOBAL_WINDOW_OK:
-            flagged[name] = f"global_window x{gw}"
+            info[name] = a["bnlj"]
+        if a["global_window"] and not spec.global_window:
+            flagged[name] = f"global_window x{a['global_window']}"
+        if a["sortagg"]:
+            sortagg[name] = a["sortagg"]
+        if a["generate_class"]:
+            gen[name] = a["generate_class"]
         print(".", end="", flush=True)
     print()
-    print(json.dumps({"flagged": flagged, "bnlj_info": info, "errors": errors}))
+    print(
+        json.dumps(
+            {
+                "flagged": flagged,
+                "bnlj_info": info,
+                "sortagg": sortagg,
+                "generate_class": gen,
+                "errors": errors,
+            }
+        )
+    )
 
 
 if __name__ == "__main__":

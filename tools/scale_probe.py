@@ -38,122 +38,6 @@ sys.path.insert(0, ".")
 BASE = "/root/testdata/sf0.1"
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
-# one representative query per family — chosen to exercise the
-# family's characteristic shuffle/join shape end-to-end
-FAMILIES = {
-    "dedup": "consensus_near_dups",
-    "suffix": "span_unit_repeats",
-    "ann": "knn_ivfpq",
-    "retrieval": "bm25_rank",
-    "events": "session_windows",
-    "relational": "revenue_by_nation",
-    "sampling": "token_budget_sample",
-    "sketch": "cms_user_counts",
-    "scrub": "scrub_spans",
-    "winnowing": "winnowing_pairs",
-    "cdc": "cdc_chunks",
-    "lm": "ngram_lm_score",
-    "cc_star": "dedup_clusters_star",
-    "bpe": "bpe_pair_counts",
-    # round-5 families
-    "graph": "pagerank_docs",
-    "semdedup": "semdedup_prune",
-    "snm": "snm_pairs",
-    "timeseries": "gap_fill_hourly",
-    "selection": "dsir_scores",
-    "maintenance": "cdc_apply",
-    "bloomjoin": "bloom_semi_join",
-    "rerank": "mmr_rerank",
-    # round-6 families
-    "decontam": "bloom_decontam",
-    "dataloader": "length_bucket_batches",
-    # round-7 families
-    "curation": "embedding_outliers",
-    "linededup": "line_dedup",
-    "quality": "gopher_quality",
-    "semdecontam": "semantic_decontam",
-    # round-7 batch-4 families
-    "mixture": "doremi_weights",
-    "rankcorr": "length_bias",
-    # round-7 batch-5 families
-    "normdedup": "normalized_dedup",
-    "routing": "math_code_routing",
-    "privacy": "k_anonymity",
-    "blocklist": "blocklist_filter",
-    # round-7 batch-7 families
-    "privacygate": "k_anon_gate",
-    "containment": "containment_pairs",
-    "sourcegate": "source_gate",
-    "diversity": "ngram_diversity",
-    "clustersample": "cluster_sample",
-    "prefaudit": "preference_cycles",
-    "piireport": "pii_source_report",
-    "subquery": "sole_returned_supplier",
-    "embdrift": "embedding_drift",
-    "salvage": "chunk_salvage",
-    "gsample": "grouped_priority_sample",
-    "triangles": "triangle_docs",
-    "pretoken": "regex_token_report",
-    "patchgrid": "patch_grid",
-    "manifest": "shard_manifest",
-    "ttldecay": "dedup_ttl_decay",
-    "rejections": "rejection_reasons",
-    "pitjoin": "events_pit_join",
-    "mergequant": "merged_quantiles",
-    "abtest": "ab_test_report",
-    "engagement": "engagement_ratios",
-    "basket": "frequent_pairs",
-    "islands": "ingestion_islands",
-    "bitmap": "type_bitmap_overlap",
-    # round-8 families (+ the two r7 self-evals the r7 verdict asked
-    # to probe directly — they are bench-tail top-10 and had no
-    # PERF.md row of their own)
-    "selfeval_ann": "ann_method_recall",
-    "selfeval_dedup": "dedup_method_recall",
-    "nprobesweep": "ivf_nprobe_sweep",
-    "zipf": "zipf_fit",
-    "pplmix": "ppl_bucket_mixture",
-    "tpchq7": "volume_shipping",
-    "bpeapply": "bpe_encode_fixed",
-    # round-8 batch-4 families
-    "classify": "quality_classifier",
-    "scenecut": "scene_cuts",
-    # round-8 batch-5 families
-    "homogeneity": "sensitive_homogeneity",
-    "argmin": "cheapest_supplier",
-    "winrate": "winrate_matrix",
-    # round-8 batch-6 families
-    "hierarchy": "hierarchy_rollup",
-    "canary": "canary_scan",
-    # round-8 batch-8 families
-    "linkage": "record_linkage",
-    "powiter": "pca_power",
-    # round-8 batch-9 family
-    "simhashpairs": "simhash_pairs",
-    # round-8 batch-10 family
-    "bandsweep": "minhash_band_sweep",
-    # round-11 x100 additions: the other capped-index ANN spellings,
-    # so the x100 ANN table covers the whole linear-path family
-    "annres": "knn_ivfpq_res",
-    "annpq": "knn_pq",
-    # round-9 families
-    "tcloseness": "t_closeness",
-    "llmboundary": "llm_json_extract",
-    "tpchq8": "nation_market_share",
-    "tpchq10": "returned_item_report",
-    "tpchq4": "late_order_priority",
-    # round-12 perturbed-replica x100 targets (pair-emitting dedup +
-    # the incremental substring path; probe these with --perturb)
-    "increpeats": "incremental_repeat_spans",
-    "minhashpairs": "minhash_pairs",
-    # round-10 families (the remaining classic TPC-H shapes)
-    "tpchq9": "product_type_profit",
-    "tpchq11": "important_stock",
-    "tpchq13": "customer_order_distribution",
-    "tpchq16": "supplier_part_variety",
-    "tpchq20": "promo_stock_suppliers",
-}
-
 # id column to offset per replica, per table (None = replicate as-is)
 ID_OFFSETS = {
     "documents": ("doc_id", 1_000_000),
@@ -260,13 +144,15 @@ def main() -> None:
     out_dir = os.path.join(SCRATCH, f"sf1x{rep}" + ("p" if perturb else ""))
     build(spark, rep, out_dir, perturb=perturb)
 
-    qs = registry.queries()
+    # one representative query per family (its register() line declares
+    # family=), chosen to exercise the family's characteristic
+    # shuffle/join shape end-to-end
+    families = {s.family: (n, s.fn) for n, s in registry.specs().items() if s.family}
     only = set(args)  # optional family-name filter (rep already consumed)
     results = {}
-    for fam, qname in FAMILIES.items():
+    for fam, (qname, fn) in families.items():
         if only and fam not in only:
             continue
-        fn = qs[qname]
         times = {}
         for label, d in [("sf0.1", BASE), (f"x{rep}", out_dir)]:
             t0 = time.perf_counter()

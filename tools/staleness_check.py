@@ -29,12 +29,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# rows-only-by-design queries (no SQL oracle): green = rows ran, no err
-ROWS_ONLY = {"bpe_merges", "bpe_encode", "lrs_exact"}
-
-
 def latest_rows() -> dict[str, tuple[int, bool, int]]:
     """query -> (latest round seen, was that row green, key position in that round's file)."""
+    from joblink_etl_spark.plans import registry
+
+    # registered without an oracle = rows-only by design: green = rows ran, no err
+    rows_only = set(registry.queries()) - set(registry.oracles())
     out: dict[str, tuple[int, bool, int]] = {}
     for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json", path)
@@ -46,7 +46,7 @@ def latest_rows() -> dict[str, tuple[int, bool, int]]:
         for pos, (name, row) in enumerate(data.items()):
             if not isinstance(row, dict):
                 continue
-            if name in ROWS_ONLY:
+            if name in rows_only:
                 # driver records err='no_oracle' with the row count —
                 # green = the query RAN and produced rows (its
                 # algorithm is hash-checked via the oracled _fixed /
